@@ -29,8 +29,6 @@ Feature-contract notes (SURVEY.md §2.11 fixes, preserved divergences):
 
 from __future__ import annotations
 
-import logging
-
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
@@ -42,8 +40,7 @@ from soccerpredictor_spark.operators.relational import (
     results_labels,
     top_companies,
 )
-
-log = logging.getLogger(__name__)
+from soccerpredictor_spark.schemas import UnknownTableError
 
 ODDS_VALUE_COLS = [
     "final_win", "final_draw", "final_lose",
@@ -53,6 +50,19 @@ OU_VALUE_COLS = [
     "initial_over", "initial_line", "initial_under",
     "final_over", "final_line", "final_under",
 ]
+
+_ODDS_BLOCK = ("game_odds", ODDS_VALUE_COLS, "odds", ())
+#: task -> its pivoted feature blocks in join order, each (source
+#: table, value columns, flag, line columns); train and predict both
+#: read it, so their matrices align by construction. The task name is
+#: also its label column in ``results_labels``.
+TASK_FEATURES: dict[str, tuple[tuple[str, list[str], str, tuple[str, ...]], ...]] = {
+    "flat": (_ODDS_BLOCK,),
+    "overunder": (
+        _ODDS_BLOCK,
+        ("game_overunder", OU_VALUE_COLS, "overunder", ("initial_line", "final_line")),
+    ),
+}
 
 
 class SoccerPredictor:
@@ -86,66 +96,39 @@ class SoccerPredictor:
         return game_list(self.team_list, self.game_record, team_id, hg)
 
     def get_top10(self, table: str = "game_odds", k: int = 10) -> list[str]:
-        """A1+A2: the top-k companies by row count, as a plain list
-        (used as the explicit pivot-value list, mirroring the
-        reference's two uses of the same query)."""
-        df = self.game_odds if table == "game_odds" else self.game_overunder
-        return [r[0] for r in top_companies(df, k).collect()]
+        """A1+A2: the top-k companies of ``game_odds`` or
+        ``game_overunder`` by row count, as a plain list (used as the
+        explicit pivot-value list, mirroring the reference's two uses
+        of the same query)."""
+        if table not in ("game_odds", "game_overunder"):
+            raise UnknownTableError(f"get_top10 reads game_odds or game_overunder, not {table!r}")
+        return [r[0] for r in top_companies(getattr(self, table), k).collect()]
 
-    # -- feature assembly --------------------------------------------------
+    # -- one path per stage: features, train, predict ----------------------
 
-    def _odds_features(self, games: DataFrame) -> tuple[DataFrame, list[str]]:
-        companies = self.get_top10("game_odds")
-        feat = label_odds(self.game_odds, games, companies, ODDS_VALUE_COLS, "odds")
-        return feat, [c for c in feat.columns if c != "id"]
+    def _features(self, task: str, games: DataFrame) -> list[DataFrame]:
+        """The task's feature blocks over ``games``, in join order."""
+        return [
+            label_odds(getattr(self, table), games, self.get_top10(table), values, flag,
+                       line_cols=lines)
+            for table, values, flag, lines in TASK_FEATURES[task]
+        ]
 
-    def _ou_features(self, games: DataFrame) -> tuple[DataFrame, list[str]]:
-        companies = self.get_top10("game_overunder")
-        feat = label_odds(
-            self.game_overunder, games, companies, OU_VALUE_COLS, "overunder",
-            line_cols=("initial_line", "final_line"),
-        )
-        return feat, [c for c in feat.columns if c != "id"]
-
-    # -- training ----------------------------------------------------------
-
-    def train_flat(self, team_id: str, hg: int) -> float:
-        """3-class win/draw/loss model for one (team, venue); returns
-        holdout accuracy (reference: train_flat, XGBoost/Predictor.py:36-60)."""
+    def _train(self, task: str, team_id: str, hg: int) -> float:
         games = self.get_game_list(team_id, hg)
-        feat, cols = self._odds_features(games)
-        labels = results_labels(self.game_record, games).select("id", "flat")
-        train = assemble_features([feat], labels, drop_null=True)
-        n = train.count()
-        log.info("train_flat %s_%s: %d rows after dropna", team_id, hg, n)
-        path = ML.model_path(self.models_dir, team_id, hg, "flat")
-        _model, acc = ML.train_model(train, cols, "flat", path)
+        blocks = self._features(task, games)
+        labels = results_labels(self.game_record, games).select("id", task)
+        train = assemble_features(blocks, labels, drop_null=True)
+        cols = [c for b in blocks for c in b.columns if c != "id"]
+        path = ML.model_path(self.models_dir, team_id, hg, task)
+        _model, acc = ML.train_model(train, cols, task, path)
         return acc
 
-    def train_overunder(self, team_id: str, hg: int) -> float:
-        """Binary over/under model; features = odds + over/under pivots
-        (3-way join, reference: XGBoost/Predictor.py:62-87)."""
-        games = self.get_game_list(team_id, hg)
-        ofeat, ocols = self._odds_features(games)
-        ufeat, ucols = self._ou_features(games)
-        labels = results_labels(self.game_record, games).select("id", "overunder")
-        train = assemble_features([ofeat, ufeat], labels, drop_null=True)
-        path = ML.model_path(self.models_dir, team_id, hg, "overunder")
-        _model, acc = ML.train_model(train, ocols + ucols, "overunder", path)
-        return acc
-
-    # -- prediction --------------------------------------------------------
-
-    def _predict(self, team_id: str, hg: int, task: str, min_id: int) -> DataFrame:
+    def _predict(self, task: str, team_id: str, hg: int, min_id: int) -> DataFrame:
         games = self.get_game_list(team_id, hg).filter(
             F.col("id").try_cast("int") > min_id
         )
-        if task == "flat":
-            feat, _ = self._odds_features(games)
-        else:
-            ofeat, _ = self._odds_features(games)
-            ufeat, _ = self._ou_features(games)
-            feat = assemble_features([ofeat, ufeat], drop_null=False)
+        feat = assemble_features(self._features(task, games), drop_null=False)
         model = ML.load_model(ML.model_path(self.models_dir, team_id, hg, task))
         if model is None:
             raise FileNotFoundError(
@@ -154,11 +137,21 @@ class SoccerPredictor:
             )
         return ML.predict(model, feat)
 
+    def train_flat(self, team_id: str, hg: int) -> float:
+        """3-class win/draw/loss model for one (team, venue); returns
+        holdout accuracy (reference: train_flat, XGBoost/Predictor.py:36-60)."""
+        return self._train("flat", team_id, hg)
+
+    def train_overunder(self, team_id: str, hg: int) -> float:
+        """Binary over/under model; features = odds + over/under pivots
+        (3-way join, reference: XGBoost/Predictor.py:62-87)."""
+        return self._train("overunder", team_id, hg)
+
     def predict_flat(self, team_id: str = "19", hg: int = 0, min_id: int = 1600000) -> DataFrame:
         """(id, predicted_label in '3'/'1'/'0') for recent games
         (reference: predict_flat, XGBoost/Predictor.py:124-145; the
         cast(id)>1600000 recency filter is P4)."""
-        return self._predict(team_id, hg, "flat", min_id)
+        return self._predict("flat", team_id, hg, min_id)
 
     def predict_overunder(
         self, team_id: str = "19", hg: int = 0, min_id: int = 1500000
@@ -166,4 +159,4 @@ class SoccerPredictor:
         """(id, predicted_label in '1'/'0') — NaN features flow to the
         imputer, preserving the reference's predict-time null
         passthrough (N2)."""
-        return self._predict(team_id, hg, "overunder", min_id)
+        return self._predict("overunder", team_id, hg, min_id)

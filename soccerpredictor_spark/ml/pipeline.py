@@ -5,10 +5,9 @@ Re-expresses the reference's per-(team, venue, task) XGBoost flow
 
 - M1 train/test split: randomSplit([0.4, 0.6], seed=2) — the reference
   holds out 60% as *test* (test_size=0.6, random_state=2, config.py:31-32).
-- M2 fit: SparkXGBClassifier when xgboost is installed, else MLlib
-  GBTClassifier (binary) / OneVsRest+GBT (3-class) with the
-  reference's depth/rounds/step — same boosted-tree family, per
-  SURVEY.md §7.4. Labels are the reference's
+- M2 fit: MLlib GBTClassifier (binary) / OneVsRest+GBT (3-class)
+  with the reference's depth/rounds/step — the reference's
+  boosted-tree family, per SURVEY.md §7.4. Labels are the reference's
   string encodings ('3'/'1'/'0', '1'/'0'); a pinned-order StringIndexer
   maps them to indices and IndexToString restores them on output, so
   predictions surface exactly like the reference's.
@@ -47,35 +46,24 @@ TEST_FRACTION = 0.6  # reference: test_size=0.6 (config.py:31)
 
 
 def _estimator(num_classes: int):
-    """Pluggable classifier, staying in the reference's boosted-tree
-    family (XGBoost/Predictor.py:106-111: max_depth=2,
-    n_estimators=100, learning_rate=0.1):
-
-    - xgboost.spark when installed (hyperparameter-exact);
-    - else MLlib GBTClassifier with the same depth/rounds/step — GBT
-      is binary-only in MLlib, so the 3-class task wraps it in
-      OneVsRest (per SURVEY §7.4). A same-API forest fallback would
-      silently change both the model family and what the
-      hyperparameters mean.
+    """The classifier, staying in the reference's boosted-tree family
+    with its hyperparameters (XGBoost/Predictor.py:106-111:
+    max_depth=2, n_estimators=100, learning_rate=0.1): MLlib
+    GBTClassifier with the same depth/rounds/step. GBT is binary-only
+    in MLlib, so the 3-class task wraps it in OneVsRest (per SURVEY
+    §7.4). A same-API forest would silently change both the model
+    family and what the hyperparameters mean.
     """
-    try:
-        from xgboost.spark import SparkXGBClassifier  # type: ignore
-
-        return SparkXGBClassifier(
-            max_depth=2, n_estimators=100, learning_rate=0.1,
-            features_col="features", label_col="label",
-        )
-    except ImportError:
-        gbt = GBTClassifier(
-            featuresCol="features", labelCol="label", seed=SEED,
-            maxDepth=2, maxIter=100, stepSize=0.1,
-        )
-        if num_classes <= 2:
-            return gbt
-        return OneVsRest(
-            classifier=gbt, featuresCol="features", labelCol="label",
-            predictionCol="prediction", parallelism=4,
-        )
+    gbt = GBTClassifier(
+        featuresCol="features", labelCol="label", seed=SEED,
+        maxDepth=2, maxIter=100, stepSize=0.1,
+    )
+    if num_classes <= 2:
+        return gbt
+    return OneVsRest(
+        classifier=gbt, featuresCol="features", labelCol="label",
+        predictionCol="prediction", parallelism=4,
+    )
 
 
 def build_pipeline(feature_cols: list[str], label_col: str, labels: list[str]) -> Pipeline:

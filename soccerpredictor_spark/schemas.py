@@ -85,6 +85,20 @@ SOCCER_TABLES: dict[str, tuple[T.StructType, tuple[str, ...]]] = {
     "game_overunder": (GAME_OVERUNDER, ("id", "odds_company")),
 }
 
+
+class UnknownTableError(ValueError):
+    """Raised for a table name outside the soccer-table whitelist
+    (reference: Spider/GameSpider.py:190-193 name check)."""
+
+
+def soccer_table(name: str) -> tuple[T.StructType, tuple[str, ...]]:
+    """The one whitelist lookup behind ingest and upsert: a soccer
+    table's (schema, primary key columns)."""
+    if name not in SOCCER_TABLES:
+        raise UnknownTableError(f"unknown table {name!r}; known: {sorted(SOCCER_TABLES)}")
+    return SOCCER_TABLES[name]
+
+
 #: reference-code column aliases -> canonical DDL names (SURVEY.md §1.2).
 COLUMN_ALIASES: dict[str, str] = {
     "host_t": "host_team",

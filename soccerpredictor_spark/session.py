@@ -17,6 +17,31 @@ import os
 
 from pyspark.sql import SparkSession
 
+#: AQE's coalesce floor is 1 MiB/partition — on the megabyte-scale
+#: local fixtures that collapses every post-shuffle stage to 1-2 tasks
+#: and serializes downstream compute on one core. A lower floor keeps
+#: local parallelism; at cluster data volumes partitions are far above
+#: either floor, so this is inert there.
+MIN_PARTITION_SIZE = "64k"
+
+#: With a huge driver heap Spark sizes TaskMemoryManager pages at the
+#: 64 MiB cap; local[32]'s many small-partition agg/sort tasks then
+#: each zero a 64 MiB page for kilobytes of data — measured 1.5x
+#: end-to-end on the LSH pipeline at sf0.1. Small pages cost nothing at
+#: these partition sizes; a real cluster (non-local master) keeps
+#: Spark's own sizing.
+LOCAL_PAGE_SIZE = "4m"
+
+#: Spark 4 routes lower()/upper() through ICU case mapping by default.
+#: Profiling (round 4) caught all 32 executor threads pinned in
+#: CollationSupport$Lower.execBinaryICU: ICU's shared case tables
+#: degrade catastrophically under concurrent access — a 32-task
+#: lowercase stage ran 543 task-seconds for ~33 CPU seconds of work.
+#: The JVM fast path is byte-identical on ASCII corpora (the fixtures
+#: and oracle twins are ASCII-only); set "true" for corpora that need
+#: ICU's locale-edge-case handling (Greek final sigma etc.).
+ICU_CASE_MAPPINGS = "false"
+
 
 def get_spark(app_name: str = "soccerpredictor_spark") -> SparkSession:
     """Build (or fetch) the configured SparkSession.
@@ -37,31 +62,10 @@ def get_spark(app_name: str = "soccerpredictor_spark") -> SparkSession:
         .config("spark.sql.adaptive.enabled", "true")
         .config("spark.sql.adaptive.coalescePartitions.enabled", "true")
         .config("spark.sql.adaptive.skewJoin.enabled", "true")
-        # AQE's coalesce floor is 1 MiB/partition — on the megabyte-scale
-        # local fixtures that collapses every post-shuffle stage to 1-2
-        # tasks and serializes downstream compute on one core. A lower
-        # floor keeps local parallelism; at cluster data volumes
-        # partitions are far above either floor, so this is inert there
-        # (and env-overridable like the rest).
-        .config(
-            "spark.sql.adaptive.coalescePartitions.minPartitionSize",
-            os.environ.get("SPARK_GRAFT_MIN_PARTITION_SIZE", "64k"),
-        )
+        .config("spark.sql.adaptive.coalescePartitions.minPartitionSize", MIN_PARTITION_SIZE)
         .config("spark.driver.memory", mem)
         .config("spark.sql.session.timeZone", "UTC")
-        # Spark 4 routes lower()/upper() through ICU case mapping by
-        # default. Profiling (round 4) caught all 32 executor threads
-        # pinned in CollationSupport$Lower.execBinaryICU: ICU's shared
-        # case tables degrade catastrophically under concurrent access
-        # — a 32-task lowercase stage ran 543 task-seconds for ~33 CPU
-        # seconds of work. The JVM fast path is byte-identical on ASCII
-        # corpora (the fixtures and oracle twins are ASCII-only); flip
-        # the env var for corpora that need ICU's locale-edge-case
-        # handling (Greek final sigma etc.).
-        .config(
-            "spark.sql.icu.caseMappings.enabled",
-            os.environ.get("SPARK_GRAFT_ICU_CASE", "false"),
-        )
+        .config("spark.sql.icu.caseMappings.enabled", ICU_CASE_MAPPINGS)
         # Reference semantics are permissive (bad cast -> NULL, DAO/ImpalaCon.py:95-99);
         # expressions also use try_cast/try_divide so they stay correct in a
         # driver-owned ANSI session.
@@ -71,15 +75,7 @@ def get_spark(app_name: str = "soccerpredictor_spark") -> SparkSession:
         .config("spark.ui.showConsoleProgress", "false")
     )
     if master.startswith("local"):
-        # With a huge driver heap Spark sizes TaskMemoryManager pages at
-        # the 64 MiB cap; local[32]'s many small-partition agg/sort tasks
-        # then each zero a 64 MiB page for kilobytes of data — measured
-        # 1.5x end-to-end on the LSH pipeline at sf0.1. Small pages cost
-        # nothing at these partition sizes; a real cluster (non-local
-        # master) keeps Spark's own sizing.
-        builder = builder.config(
-            "spark.buffer.pageSize", os.environ.get("SPARK_GRAFT_PAGE_SIZE", "4m")
-        )
+        builder = builder.config("spark.buffer.pageSize", LOCAL_PAGE_SIZE)
     spark = builder.getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     return spark

@@ -16,7 +16,7 @@ from collections.abc import Iterable, Sequence
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from soccerpredictor_spark.schemas import SOCCER_TABLES
+from soccerpredictor_spark.schemas import soccer_table
 
 #: regex the reference uses to pull the match id out of an analysis
 #: URL (Spider/GameSpider.py:95-97).
@@ -31,11 +31,10 @@ def rows_to_df(spark: SparkSession, table: str, rows: Iterable[Sequence[str]]) -
 
     Arity validation mirrors the reference's keep-only-N-field checks
     (Spider/GameSpider.py:88,182): short/long rows are dropped, not
-    padded or truncated.
+    padded or truncated. Raises ``UnknownTableError`` for a table
+    outside the whitelist.
     """
-    if table not in SOCCER_TABLES:
-        raise ValueError(f"unknown table {table!r}")
-    schema, _pk = SOCCER_TABLES[table]
+    schema, _pk = soccer_table(table)
     n = len(schema)
     good = [list(r) for r in rows if len(r) == n]
     return spark.createDataFrame(good, schema=schema)

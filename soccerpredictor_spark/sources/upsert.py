@@ -2,14 +2,15 @@
 
 Re-expresses the reference's per-row Kudu ``UPSERT INTO`` sink
 (Spider/GameSpider.py:187-202) as batch, idempotent DataFrame writes:
-union the new batch with the existing table, keep the latest version
-per PK, and atomically swap the table directory. The reference's
-table-name whitelist check is preserved at the catalog layer.
+keep the latest batch row per PK, drop the existing rows whose PK the
+batch carries, union the two, and atomically swap the table directory.
+``upsert`` checks the table name against the soccer-table whitelist
+(``schemas.soccer_table``), as the reference does.
 
-Scale notes: latest-by-key is one shuffle on the PK (window row_number
-with partial pushdown via AQE); for a 100 TB table you would partition
-the table by a stable key and rewrite only affected partitions —
-``upsert`` takes an optional ``partition_col`` for exactly that.
+Scale notes: only the batch is sorted — latest-by-key is one window
+shuffle of the batch on the PK — and the existing table is touched by
+one PK anti-join (a key-only broadcast when the batch is small). The
+whole merged table is still rewritten on every batch.
 """
 
 from __future__ import annotations
@@ -22,19 +23,12 @@ from collections.abc import Sequence
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
-from soccerpredictor_spark.schemas import SOCCER_TABLES
-
-
-class UnknownTableError(ValueError):
-    """Raised for a table name outside the catalog whitelist
-    (reference: Spider/GameSpider.py:190-193 name check)."""
+from soccerpredictor_spark.schemas import UnknownTableError, soccer_table  # noqa: F401  (re-exported)
 
 
 def check_table(table: str) -> tuple[str, ...]:
     """Whitelist check; returns the table's PK columns."""
-    if table not in SOCCER_TABLES:
-        raise UnknownTableError(f"unknown table {table!r}; known: {sorted(SOCCER_TABLES)}")
-    return SOCCER_TABLES[table][1]
+    return soccer_table(table)[1]
 
 
 def latest_by_key(
@@ -61,18 +55,18 @@ def upsert_df(
     existing: DataFrame | None,
     batch: DataFrame,
     pk: Sequence[str],
-    version_col: str = "__batch",
     seq_col: str | None = None,
 ) -> DataFrame:
-    """Pure-DataFrame upsert: new batch rows win over existing rows on
-    PK collision; within a batch, the row with the highest ``seq_col``
-    wins (matching sequential per-row UPSERT order in the reference).
+    """Pure-DataFrame upsert — ``apply_cdc`` without deletes: new batch
+    rows win over existing rows on PK collision; within a batch, the
+    row with the highest ``seq_col`` wins (matching sequential per-row
+    UPSERT order in the reference).
 
     Precondition: ``existing`` is a PK table (one row per PK) — the
     invariant this operator itself maintains, so it holds inductively
     across upserts. ``seq_col`` ordering applies to BATCH rows only;
-    duplicate PKs inside ``existing`` would resolve arbitrarily
-    (property-tested in tests/test_properties.py).
+    duplicate PKs inside ``existing`` survive unless the batch carries
+    the PK (property-tested in tests/test_properties.py).
 
     ``seq_col`` should be an explicit, data-derived sequence — a scrape
     timestamp, a source line number, an event id. When omitted, the
@@ -84,22 +78,9 @@ def upsert_df(
     intra-batch conflict resolution arbitrary. Ingest adapters that can
     carry a real sequence column must pass it.
     """
-    if seq_col is not None:
-        tagged_new = batch.withColumn(version_col, F.lit(1)).withColumn(
-            "__seq", F.col(seq_col).cast("long")
-        )
-    else:
-        tagged_new = batch.withColumn(version_col, F.lit(1)).withColumn(
-            "__seq", F.monotonically_increasing_id()
-        )
-    if existing is None:
-        unioned = tagged_new
-    else:
-        tagged_old = existing.withColumn(version_col, F.lit(0)).withColumn(
-            "__seq", F.lit(-1).cast("long")
-        )
-        unioned = tagged_old.unionByName(tagged_new)
-    return latest_by_key(unioned, pk, [version_col, "__seq"]).drop(version_col, "__seq")
+    seq = F.monotonically_increasing_id() if seq_col is None else F.col(seq_col)
+    changes = batch.withColumn("__op", F.lit("U")).withColumn("__seq", seq)
+    return apply_cdc(existing, changes, pk, "__op", "__seq")
 
 
 def upsert(
@@ -107,7 +88,6 @@ def upsert(
     table_dir: str,
     table: str,
     batch: DataFrame,
-    partition_col: str | None = None,
     seq_col: str | None = None,
 ) -> None:
     """Upsert a batch into a parquet table directory, atomically.
@@ -118,10 +98,7 @@ def upsert(
     whenever the batch has one.
     """
     pk = check_table(table)
-    upsert_path(
-        spark, os.path.join(table_dir, table), batch, pk,
-        partition_col=partition_col, seq_col=seq_col,
-    )
+    upsert_path(spark, os.path.join(table_dir, table), batch, pk, seq_col=seq_col)
 
 
 def upsert_path(
@@ -129,7 +106,6 @@ def upsert_path(
     path: str,
     batch: DataFrame,
     pk: Sequence[str],
-    partition_col: str | None = None,
     seq_col: str | None = None,
     out_partitions: int | None = None,
 ) -> None:
@@ -146,22 +122,17 @@ def upsert_path(
     merged = upsert_df(existing, batch, pk, seq_col=seq_col)
     if out_partitions is not None:
         merged = merged.coalesce(out_partitions)
-    atomic_swap_write(merged, path, partition_col=partition_col)
+    atomic_swap_write(merged, path)
 
 
-def atomic_swap_write(
-    df: DataFrame, path: str, partition_col: str | None = None
-) -> None:
+def atomic_swap_write(df: DataFrame, path: str) -> None:
     """Write ``df`` as a parquet table at ``path`` atomically:
     write-to-temp, then directory rename swap — a partial failure
     never leaves a corrupt table. The single swap implementation
     shared by the batch upsert, the streaming foreachBatch upsert
     sink, and the CDC sink."""
     tmp = f"{path}.__tmp_{uuid.uuid4().hex[:8]}"
-    writer = df.write.mode("overwrite")
-    if partition_col is not None:
-        writer = writer.partitionBy(partition_col)
-    writer.parquet(tmp)
+    df.write.mode("overwrite").parquet(tmp)
     # Force materialization happened at write; now swap directories.
     if os.path.exists(path):
         old = f"{path}.__old_{uuid.uuid4().hex[:8]}"
@@ -179,32 +150,31 @@ def apply_cdc(
     op_col: str,
     seq_col: str,
 ) -> DataFrame:
-    """Full CDC merge — the DELETE-capable generalization of
-    ``upsert_df`` (Delta/Iceberg ``MERGE WHEN MATCHED THEN
-    UPDATE/DELETE`` semantics as plain DataFrame ops):
+    """Full CDC merge — the one PK merge, behind ``upsert_df`` too
+    (Delta/Iceberg ``MERGE WHEN MATCHED THEN UPDATE/DELETE`` semantics
+    as plain DataFrame ops):
 
     - ``changes`` rows carry ``op_col`` ('I'/'U' upsert, 'D' delete)
       and a unique ``seq_col`` ordering the stream;
     - per PK, only the LATEST change matters (one window pass over the
       change batch — the change stream, not the table, pays the sort);
     - final state = (existing MINUS changed PKs) UNION latest
-      non-delete changes.
+      non-delete changes. PKs match null-safely, so a NULL key is one
+      key like any other.
 
     Shape at 100 TB: the big ``existing`` table is touched by exactly
     one anti-join on the PK (key-only broadcast when the change batch
     is small — the common case); deletes cost nothing extra.
     """
-    w = Window.partitionBy(*pk).orderBy(F.col(seq_col).cast("long").desc())
-    latest = (
-        changes.withColumn("__rn", F.row_number().over(w))
-        .filter(F.col("__rn") == 1)
-        .drop("__rn")
+    latest = latest_by_key(
+        changes.withColumn(seq_col, F.col(seq_col).cast("long")), pk, [seq_col]
     )
     survivors = latest.filter(F.col(op_col) != "D").drop(op_col, seq_col)
     if existing is None:
         return survivors
-    keep = existing.join(latest.select(*pk), list(pk), "left_anti")
-    return keep.unionByName(survivors)
+    keys = changes.select(*[F.col(k).alias(f"__pk{i}") for i, k in enumerate(pk)])
+    on = [F.col(k).eqNullSafe(F.col(f"__pk{i}")) for i, k in enumerate(pk)]
+    return existing.join(keys, on, "left_anti").unionByName(survivors)
 
 
 # --------------------------------------------------------------------------

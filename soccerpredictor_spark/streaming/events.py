@@ -391,17 +391,16 @@ def upsert_sink(
     parquet table by primary key via ``foreachBatch`` — the streaming
     twin of the reference's per-row UPSERT loop
     (Spider/GameSpider.py:187-202), re-expressed as idempotent batch
-    merges (sources/upsert.upsert_path: union + latest-by-PK + atomic
-    directory swap).
+    merges (sources/upsert.upsert_path: latest-by-PK over the batch,
+    PK anti-join against the table, union, atomic directory swap).
 
     Later micro-batches win on PK collision; within a batch ``seq_col``
     orders conflicts (see upsert_df's contract). foreachBatch is the
     standard escape hatch for sinks Spark has no native writer for —
     each batch is an ordinary DataFrame, so the WHOLE batch toolchain
     (merge, dedup, validation) applies unchanged. At scale the merge
-    cost is one shuffle of (existing ∪ batch) per trigger; for a
-    100 TB table you partition the table and rewrite only affected
-    partitions (upsert_path's partition_col).
+    sorts only the micro-batch; the table pays one PK anti-join and a
+    full rewrite per trigger.
 
     Returns the started StreamingQuery (caller awaits/stops).
     """

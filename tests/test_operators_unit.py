@@ -81,10 +81,12 @@ class TestTopCompanies:
 
 
 class TestUpsert:
-    def test_whitelist(self):
+    def test_whitelist(self, spark):
         assert check_table("game_odds") == ("id", "odds_company")
         with pytest.raises(UnknownTableError):
             check_table("not_a_table")
+        with pytest.raises(UnknownTableError):
+            rows_to_df(spark, "not_a_table", [["1", "x"]])
 
     def test_latest_by_key(self, spark):
         df = spark.createDataFrame(
@@ -112,6 +114,16 @@ class TestUpsert:
         batch = spark.createDataFrame([("1", "A", "first"), ("1", "A", "second")], ["id", "comp", "v"])
         got = upsert_df(None, batch, ["id", "comp"]).collect()
         assert len(got) == 1 and got[0].v == "second"
+
+    def test_null_pk_is_one_key(self, spark):
+        schema = "k string, v string"
+        base = spark.createDataFrame([("1", "a"), (None, "old")], schema)
+        batch = spark.createDataFrame([(None, "new")], schema)
+        got = sorted(
+            (tuple(r) for r in upsert_df(base, batch, ["k"]).collect()),
+            key=lambda t: (t[0] is None, t),
+        )
+        assert got == [("1", "a"), (None, "new")]
 
 
 class TestIngest:
@@ -602,6 +614,21 @@ class TestApplyCdc:
             [(1, 1.0, "I", 1), (1, 2.0, "D", 2)], ["k", "v", "op", "seq"]
         )
         assert apply_cdc(None, changes, ["k"], "op", "seq").count() == 0
+
+    def test_null_pk_update_and_delete(self, spark):
+        from soccerpredictor_spark.sources.upsert import apply_cdc
+
+        base = spark.createDataFrame([("1", "a"), (None, "old")], "k string, v string")
+
+        def merged(op):
+            changes = spark.createDataFrame(
+                [(None, "new", op, 1)], "k string, v string, op string, seq long"
+            )
+            rows = apply_cdc(base, changes, ["k"], "op", "seq").collect()
+            return sorted((tuple(r) for r in rows), key=lambda t: (t[0] is None, t))
+
+        assert merged("U") == [("1", "a"), (None, "new")]
+        assert merged("D") == [("1", "a")]
 
 
 class TestCompaction:

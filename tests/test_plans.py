@@ -538,6 +538,51 @@ def test_cdc_apply_anti_join_key_only(spark, sf001):
     assert "LeftAnti" in plan
 
 
+def _plan_nodes(df) -> list[tuple[int, str]]:
+    """The physical plan (before AQE) as (depth, node text) rows in
+    tree order."""
+    plan = df._jdf.queryExecution().sparkPlan().toString()
+    return [
+        (len(ln) - len(ln.lstrip(" :+-")), ln.lstrip(" :+-"))
+        for ln in plan.splitlines()
+        if ln.strip()
+    ]
+
+
+def test_upsert_ranks_only_the_batch(spark, tmp_path):
+    """Upsert into an existing parquet table: the latest-by-PK Window
+    ranks only the batch, and the table's scan feeds only the PK
+    anti-join — the merge never sorts the whole table per batch."""
+    from soccerpredictor_spark.sources.upsert import upsert_df
+
+    schema = "id string, odds_company string, v string"
+    path = str(tmp_path / "game_odds")
+    spark.createDataFrame([("1", "A", "x"), ("2", "B", "y")], schema).write.parquet(path)
+    batch = spark.createDataFrame([("1", "A", "z"), ("3", "C", "w")], schema)
+    nodes = _plan_nodes(upsert_df(spark.read.parquet(path), batch, ["id", "odds_company"]))
+
+    def subtree(i):
+        j = i + 1
+        while j < len(nodes) and nodes[j][0] > nodes[i][0]:
+            j += 1
+        return [n for _, n in nodes[i + 1 : j]]
+
+    windows = [i for i, (_, n) in enumerate(nodes) if n.startswith("Window ")]
+    assert len(windows) == 1
+    assert not any(n.startswith("FileScan") for n in subtree(windows[0]))
+    assert any(n.startswith("Scan ExistingRDD") for n in subtree(windows[0]))
+    scans = [i for i, (_, n) in enumerate(nodes) if n.startswith("FileScan parquet")]
+    assert len(scans) == 1
+    ancestors, depth = [], nodes[scans[0]][0]
+    for d, n in reversed(nodes[: scans[0]]):
+        if d < depth:
+            ancestors.append(n)
+            depth = d
+    joins = [n for n in ancestors if n.split()[0].endswith("Join")]
+    assert len(joins) == 1 and "LeftAnti" in joins[0], joins
+    assert not any(n.startswith(("Window", "Sort ", "Exchange")) for n in ancestors), ancestors
+
+
 def test_doc_sim_knn_df_cap_and_rank_limit(spark, sf001):
     """Sparse kNN: posting join bounded by the df cap (a HAVING-style
     filter on the shingle-frequency agg) and the output bounded by a

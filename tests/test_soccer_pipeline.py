@@ -95,6 +95,14 @@ def test_predict_without_model_raises(predictor):
         predictor.predict_flat("39", 1)
 
 
+def test_get_top10_unknown_table_raises(predictor):
+    from soccerpredictor_spark.schemas import UnknownTableError
+
+    assert len(predictor.get_top10("game_overunder")) == 10
+    with pytest.raises(UnknownTableError):
+        predictor.get_top10("game_record")
+
+
 def test_split_reproducible(spark, fixtures):
     df = fixtures["game_odds"].select("id")
     a = df.randomSplit([0.4, 0.6], seed=2)[0].count()
@@ -128,44 +136,13 @@ def test_train_many_per_team(spark, fixtures):
 
 
 class TestEstimatorFactory:
-    """_estimator's xgboost.spark branch never runs in this container
-    (xgboost absent), so exercise it against a mocked module and pin
-    the hyperparameter-exact contract (reference config.py:33-35:
-    max_depth=2, n_estimators=100, learning_rate=0.1)."""
-
-    def test_xgb_branch_hyperparameters(self, monkeypatch):
-        import sys
-        import types
-
-        captured = {}
-
-        class FakeSparkXGBClassifier:
-            def __init__(self, **kw):
-                captured.update(kw)
-
-        xgb = types.ModuleType("xgboost")
-        xgb_spark = types.ModuleType("xgboost.spark")
-        xgb_spark.SparkXGBClassifier = FakeSparkXGBClassifier
-        xgb.spark = xgb_spark
-        monkeypatch.setitem(sys.modules, "xgboost", xgb)
-        monkeypatch.setitem(sys.modules, "xgboost.spark", xgb_spark)
-
-        from soccerpredictor_spark.ml.pipeline import _estimator
-
-        est = _estimator(3)
-        assert isinstance(est, FakeSparkXGBClassifier)
-        assert captured == {
-            "max_depth": 2,
-            "n_estimators": 100,
-            "learning_rate": 0.1,
-            "features_col": "features",
-            "label_col": "label",
-        }
+    """_estimator is MLlib GBT with the reference's hyperparameters
+    (config.py:33-35: max_depth=2, n_estimators=100,
+    learning_rate=0.1)."""
 
     def test_fallback_without_xgb(self, spark):  # GBT wrapper needs a live JVM
-        # in this environment xgboost is genuinely absent: the factory
-        # must return GBT (binary) / OneVsRest+GBT (3-class) with the
-        # same depth/rounds/step
+        # GBT (binary) / OneVsRest+GBT (3-class) with the reference's
+        # depth/rounds/step
         from pyspark.ml.classification import GBTClassifier, OneVsRest
 
         from soccerpredictor_spark.ml.pipeline import _estimator
